@@ -140,6 +140,12 @@ def container_cpu_rate(sample_s: float = 0.5) -> float | None:
     return (after - before) / 1e9 / sample_s
 
 
+def decay_ceiling(load_threshold: float | None) -> float | None:
+    """Absolute load1 bound of the decay-tail fast path: 3x the
+    threshold, so a zero threshold gives a ceiling of 0 (not none)."""
+    return None if load_threshold is None else 3.0 * load_threshold
+
+
 def wait_for_admission(
     load_threshold: float,
     max_wait_s: int = 900,
@@ -178,7 +184,7 @@ def wait_for_admission(
     import time
 
     started = time.time()
-    decay_ceiling = 3.0 * load_threshold if load_threshold else None
+    ceiling = decay_ceiling(load_threshold)
     while True:
         foreign = foreign_spark_processes()
         load_now = load1()
@@ -192,7 +198,7 @@ def wait_for_admission(
             if (
                 l5
                 and load_now < 0.9 * l5
-                and (decay_ceiling is None or load_now <= decay_ceiling)
+                and (ceiling is None or load_now <= ceiling)
                 and rate is not None
                 and rate < 0.5
             ):

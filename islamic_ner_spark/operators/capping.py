@@ -6,6 +6,8 @@ bands (operators/dedup.py), SimHash bands (same), hyperplane-LSH bands
 (operators/linking.py) — runs through :func:`cap_buckets`, so every
 build emits the same evidence when it drops work: one WARNING naming
 the path, how many buckets were dropped, and the largest offenders.
+The driver-side vocabulary pass (``linking.resolve_vocabulary``) caps
+its blocks in Python and emits the same WARNING via :func:`warn_dropped`.
 No silent caps anywhere.
 
 :func:`log_candidate_stats` is the companion visibility hook: one INFO
@@ -78,18 +80,27 @@ def cap_buckets(
         .orderBy(F.desc("_bucket_n"))
         .take(6)
     )
-    if hot_rows:
+    warn_dropped(
+        what,
+        [tuple(r[c] for c in key_cols) + (r["_bucket_n"],) for r in hot_rows],
+        max_bucket_size,
+    )
+    return capped
+
+
+def warn_dropped(what: str, hot: list[tuple], max_bucket_size: int) -> None:
+    """The dropped-work WARNING: ``hot`` is up to six over-capacity
+    ``(*key, size)`` tuples, largest first (six means "more exist")."""
+    if hot:
         log.warning(
             "%s: dropped %s%d over-capacity bucket(s) (> %d members) from "
             "candidate generation; largest: %s",
             what,
-            ">=" if len(hot_rows) > 5 else "",
-            len(hot_rows),
+            ">=" if len(hot) > 5 else "",
+            len(hot),
             max_bucket_size,
-            [tuple(r[c] for c in key_cols) + (r["_bucket_n"],)
-             for r in hot_rows[:5]],
+            hot[:5],
         )
-    return capped
 
 
 def log_candidate_stats(

@@ -20,11 +20,23 @@ Scale shape (the whole point of this design):
   (small) resolution table and to split skewed keys when it is not small
   (hot narrator names are Zipf-heavy; ``spark.sql.adaptive.skewJoin`` is
   on in the session defaults).
+
+Strategy is picked from a count of the distinct strings.  Up to
+``LOCAL_VOCAB_LIMIT`` of them, the whole ladder above — exact, fuzzy,
+capped token blocking, pair scoring and union-find with the same
+lexicographic-min canonical — runs in one pure-Python pass on the driver
+(:func:`resolve_vocabulary`), the cutover ``components.connected_components``
+already makes for small edge lists: the distributed ladder's ~20 jobs and
+per-task Python start-up cost more than scoring a few hundred strings.
+Both paths share the scoring kernels in ``functions/resolve.py``, which
+prune candidates with ``SequenceMatcher``'s exact upper bounds before
+computing ``ratio()`` (filter-then-verify), so the paths agree row for row.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from collections import defaultdict
+from typing import Iterator, NamedTuple, Optional
 
 import pandas as pd
 from pyspark.broadcast import Broadcast
@@ -32,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from islamic_ner_spark.operators.components import connected_components
+from islamic_ner_spark.sources.gazetteer import Gazetteer
 
 LINKABLE_TYPES = ("SCHOLAR", "BOOK", "CONCEPT", "PLACE")
 
@@ -39,6 +52,16 @@ RESOLUTION_SCHEMA = (
     "text string, entity_type string, norm_text string, "
     "canonical_name string, confidence double, match_type string"
 )
+RESOLUTION_COLUMNS = [c.split()[0] for c in RESOLUTION_SCHEMA.split(", ")]
+
+# Vocabularies of at most this many distinct (text, type) strings are
+# resolved in one driver-side pass instead of the distributed ladder.
+# The distributed path costs about 20 Spark jobs and 3-4 s before any
+# scoring; the local pass is single-threaded and grows superlinearly with
+# the vocabulary through its particle blocks.  Measured on 4 cores, the
+# local pass wins up to about 3.5k strings (5.9 s vs 6.6 s at 3,421;
+# 11.8 s vs 8.9 s at 4,091), so the limit sits just below (CHANGES.md).
+LOCAL_VOCAB_LIMIT = 3_000
 
 
 def _distinct_linkable_strings(mentions: DataFrame, triples: DataFrame) -> DataFrame:
@@ -149,12 +172,11 @@ def new_pair_edges(
     )
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from islamic_ner_spark.functions.resolve import FUZZY_THRESHOLD, similarity_ratio
+        from islamic_ner_spark.functions.resolve import is_similar_pair
 
         for batch in batches:
             keep = [
-                similarity_ratio(a, b) >= FUZZY_THRESHOLD
-                for a, b in zip(batch["text_a"], batch["text_b"])
+                is_similar_pair(a, b) for a, b in zip(batch["text_a"], batch["text_b"])
             ]
             yield batch.loc[keep, ["src", "dst"]]
 
@@ -198,41 +220,127 @@ def _canonicalize_new(
     return canon
 
 
+class Resolution(NamedTuple):
+    """A build's resolution table, plus its rows when the local pass
+    produced them (``None`` on the distributed path)."""
+
+    table: DataFrame
+    rows: Optional[list]
+
+
 def build_resolution_table(
     spark: SparkSession,
     mentions: DataFrame,
     triples: DataFrame,
-    gazetteer_df: DataFrame,
     gazetteer_bc: Broadcast,
     persisted: list | None = None,
-) -> DataFrame:
+) -> Resolution:
     """Distinct (text, entity_type) -> (canonical_name, confidence,
     match_type) via the exact -> fuzzy -> new ladder.
 
-    The exact and fuzzy rungs both score against the *broadcast* gazetteer
-    dimension and are independent per string, so they run fused in ONE
-    batched Arrow pass over the distinct strings (exact = broadcast hash
-    lookup, the map-side half of a broadcast hash join; fuzzy = the
-    reference's SequenceMatcher scoring, entity_resolver.py:26-100).  The
-    earlier staging of this ladder as join -> UDF -> unions spent ~3
-    extra stage/persist round-trips per build on vocabulary-sized data.
-    Only the "new" remainder needs corpus-joint work (blocking +
-    connected components).  ``gazetteer_df`` is kept in the signature for
-    callers that want the dimension relationally (tests, ad-hoc joins).
-    ``persisted`` (when given) collects the cached ladder table so
-    long-running callers — the streaming foreachBatch loop relies on
-    ``GraphBuildResult.unpersist()`` — can release it per build.
+    The distinct strings are persisted and counted first.  Up to
+    ``LOCAL_VOCAB_LIMIT`` of them are collected and resolved in one
+    driver-side pass (:func:`resolve_vocabulary`); the table is then one
+    small Arrow-built frame and its rows are returned too, so the fused
+    graph pass needs no further jobs to read them.  Above the limit the
+    distributed ladder runs: exact and fuzzy scoring (entity_resolver.py:
+    26-100) fused in ONE batched Arrow pass over the distinct strings
+    (:func:`score_strings_ladder`),
+    then blocking + pair scoring + connected components for the "new"
+    remainder.  Both paths give the same rows.  ``persisted`` (when
+    given) collects the cached intermediates so long-running callers —
+    the streaming foreachBatch loop relies on
+    ``GraphBuildResult.unpersist()`` — can release them per build.
     """
-    strings = _distinct_linkable_strings(mentions, triples)
+    strings = _distinct_linkable_strings(mentions, triples).persist()
+    if strings.count() <= LOCAL_VOCAB_LIMIT:
+        collected = [(r["text"], r["entity_type"]) for r in strings.collect()]
+        strings.unpersist()
+        # MAX_BLOCK_SIZE is passed (here and below) so both paths read the
+        # module constant per call, not the default bound at import
+        rows = resolve_vocabulary(
+            collected, gazetteer_bc.value, max_block_size=MAX_BLOCK_SIZE
+        )
+        frame = pd.DataFrame(rows, columns=RESOLUTION_COLUMNS)
+        return Resolution(spark.createDataFrame(frame, schema=RESOLUTION_SCHEMA), rows)
+
     scored = score_strings_ladder(strings, gazetteer_bc).persist()
     if persisted is not None:
-        persisted.append(scored)
+        persisted.extend([strings, scored])
 
     new_strings = scored.where(F.col("match_type") == "new").select(
         "text", "entity_type", "norm_text"
     )
-    new_canon = _canonicalize_new(spark, new_strings)
-    return resolution_from_scored(scored, new_canon)
+    new_canon = _canonicalize_new(spark, new_strings, max_block_size=MAX_BLOCK_SIZE)
+    return Resolution(resolution_from_scored(scored, new_canon), None)
+
+
+def resolve_vocabulary(
+    strings: list, gazetteer: Gazetteer, *, max_block_size: int = MAX_BLOCK_SIZE
+) -> list:
+    """Pure-Python resolution of a whole (small) vocabulary.
+
+    ``strings`` are distinct ``(text, entity_type)`` pairs; the result is
+    one ``RESOLUTION_SCHEMA`` tuple per pair, equal to what the
+    distributed ladder produces: the same exact/fuzzy ladder, the same
+    token blocking (blocks sized with token multiplicity, as the exploded
+    rows count them, and capped at ``max_block_size`` with the same
+    dropped-block WARNING), the same pair predicate, and union-find with
+    the lexicographic-min canonical in place of connected components.
+    """
+    from islamic_ner_spark.functions.normalize import normalize
+    from islamic_ner_spark.functions.resolve import is_similar_pair, ladder_match
+    from islamic_ner_spark.operators.capping import warn_dropped
+
+    scored = []
+    blocks: dict = defaultdict(list)  # (type, token) -> member norms, with repeats
+    new_nodes: set = set()
+    for text, etype in strings:
+        norm = normalize(text or "")
+        canon, conf, match_type = ladder_match(norm, etype, gazetteer)
+        scored.append((text, etype, norm, canon, conf, match_type))
+        if match_type == "new" and (etype, norm) not in new_nodes:
+            new_nodes.add((etype, norm))
+            for token in norm.split(" "):
+                if token:
+                    blocks[(etype, token)].append(norm)
+
+    hot = sorted(
+        (key + (len(members),) for key, members in blocks.items()
+         if len(members) > max_block_size),
+        key=lambda h: -h[-1],
+    )
+    warn_dropped("new-entity-blocking", hot[:6], max_block_size)
+
+    parent: dict = {}
+
+    def find(node: tuple) -> tuple:
+        parent.setdefault(node, node)
+        while parent[node] != node:
+            parent[node] = parent[parent[node]]
+            node = parent[node]
+        return node
+
+    pairs: set = set()
+    for (etype, _), members in blocks.items():
+        if len(members) > max_block_size:
+            continue
+        members = sorted(set(members))
+        for i, a in enumerate(members):
+            for b in members[i + 1:]:
+                pairs.add((etype, a, b))
+    for etype, a, b in pairs:
+        if is_similar_pair(a, b):
+            ra, rb = find((etype, a)), find((etype, b))
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+
+    return [
+        (text, etype, norm,
+         find((etype, norm))[1] if mt == "new" else canon,
+         conf, mt)
+        for text, etype, norm, canon, conf, mt in scored
+    ]
 
 
 def score_strings_ladder(strings: DataFrame, gazetteer_bc: Broadcast) -> DataFrame:
@@ -242,22 +350,14 @@ def score_strings_ladder(strings: DataFrame, gazetteer_bc: Broadcast) -> DataFra
 
     def ladder(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from islamic_ner_spark.functions.normalize import normalize
-        from islamic_ner_spark.functions.resolve import best_fuzzy_candidate
+        from islamic_ner_spark.functions.resolve import ladder_match
 
         gazetteer = gazetteer_bc.value
         for batch in batches:
             norm_l, canon_l, conf_l, mt_l = [], [], [], []
             for text, etype in zip(batch["text"], batch["entity_type"]):
                 norm = normalize(text or "")
-                canonical = gazetteer.canonical_map.get((norm, etype))
-                if canonical is not None:
-                    canon, conf, mt = canonical, 1.0, "exact"
-                else:
-                    fuzzy = best_fuzzy_candidate(norm, etype, gazetteer)
-                    if fuzzy is not None:
-                        canon, conf, mt = fuzzy[0], round(fuzzy[1], 4), "fuzzy"
-                    else:
-                        canon, conf, mt = None, 0.5, "new"
+                canon, conf, mt = ladder_match(norm, etype, gazetteer)
                 norm_l.append(norm)
                 canon_l.append(canon)
                 conf_l.append(conf)

@@ -6,8 +6,11 @@ Spark lifecycle (all stages DataFrame-native, SURVEY.md §3):
       -> annotate (fused normalize + AC-gazetteer + pattern NER,
          one narrow mapInPandas)                      [no shuffle]
       -> mentions / triples (narrow mapInPandas)      [no shuffle]
-      -> resolution over DISTINCT strings (broadcast exact join,
-         batched fuzzy, CC canonicalization)          [small shuffles]
+      -> resolution over DISTINCT strings: counted first; a small
+         vocabulary (<= linking.LOCAL_VOCAB_LIMIT) is resolved in one
+         driver-side pass whose rows feed the fused graph pass
+         directly; a large one runs the distributed ladder (batched
+         exact+fuzzy, blocked pair scoring, CC)   [no / small shuffles]
       -> resolved triples/mentions (AQE broadcast/skew join)
       -> nodes/edges groupBy MERGE-semantics aggs     [keyed shuffle]
 
@@ -354,7 +357,6 @@ def _build_from_annotated(
         gazetteer_bc = spark.sparkContext.broadcast(gazetteer)
     if extracted is None:
         extracted = annotated
-    gazetteer_df = gazetteer.to_dataframe(spark)
     persisted: list = []
 
     mentions = extract_mentions(extracted)
@@ -378,8 +380,8 @@ def _build_from_annotated(
     else:
         pass  # mentions/triples are cheap explodes of the cached `extracted`
 
-    resolution = build_resolution_table(
-        spark, mentions, triples, gazetteer_df, gazetteer_bc, persisted=persisted
+    resolution, resolved_rows = build_resolution_table(
+        spark, mentions, triples, gazetteer_bc, persisted=persisted
     )
     if work_dir:
         path = str(Path(work_dir) / "resolution")
@@ -401,15 +403,19 @@ def _build_from_annotated(
         # Hadith nodes, and per-batch pre-aggregated vocabulary node
         # candidates — no cache re-scans, no joins, no big shuffles
         # (operators/graph.fused_graph_outputs).  Needs the resolution as
-        # a driver-side dict, so the strategy is chosen from a COUNT of
-        # the persisted resolution (a few bytes to the driver); the rows
-        # themselves are only collected once the count says they fit.
-        # Beyond FUSED_VOCAB_LIMIT the relational materialize is the
-        # default — no multi-GB speculative collect at extreme vocab.
-        if resolution.count() <= FUSED_VOCAB_LIMIT:
+        # a driver-side dict.  A vocabulary resolved by the local pass
+        # hands its rows over directly (no further jobs); otherwise the
+        # strategy is chosen from a COUNT of the persisted resolution (a
+        # few bytes to the driver) and the rows are only collected once
+        # the count says they fit.  Beyond FUSED_VOCAB_LIMIT the
+        # relational materialize is the default — no multi-GB
+        # speculative collect at extreme vocab.
+        if resolved_rows is None and resolution.count() <= FUSED_VOCAB_LIMIT:
+            resolved_rows = resolution.collect()
+        if resolved_rows is not None:
             res_dict = {
-                (r["text"], r["entity_type"]): (r["canonical_name"], r["confidence"])
-                for r in resolution.collect()
+                (text, etype): (canonical, confidence)
+                for text, etype, _, canonical, confidence, _ in resolved_rows
             }
             res_bc = spark.sparkContext.broadcast(res_dict)
             fused = fused_graph_outputs(extracted, res_bc).persist()

@@ -37,14 +37,13 @@ def main() -> None:
     transcripts = spark.read.parquet(staging)
     gaz = Gazetteer.from_dir(DEFAULT_GAZETTEER_DIR)
     gaz_bc = spark.sparkContext.broadcast(gaz)
-    gaz_df = gaz.to_dataframe(spark)
 
     annotated = annotate_transcripts(transcripts, gaz_bc)
     extracted = annotated.select("conv_id", "turn_idx", "doc_id", "mentions", "triples").persist()
     extracted.count()
     mentions = extract_mentions(extracted)
     triples = extract_triples(extracted)
-    resolution = build_resolution_table(spark, mentions, triples, gaz_df, gaz_bc).persist()
+    resolution = build_resolution_table(spark, mentions, triples, gaz_bc).table.persist()
     resolution.count()
 
     resolved_triples = resolve_triples(triples, resolution)

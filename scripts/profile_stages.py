@@ -50,7 +50,6 @@ def main() -> None:
     transcripts = spark.read.parquet(staging)
     gaz = Gazetteer.from_dir(DEFAULT_GAZETTEER_DIR)
     gaz_bc = spark.sparkContext.broadcast(gaz)
-    gaz_df = gaz.to_dataframe(spark)
 
     annotated = annotate_transcripts(transcripts, gaz_bc)
     extracted = annotated.select("conv_id", "turn_idx", "doc_id", "mentions", "triples").persist()
@@ -63,7 +62,7 @@ def main() -> None:
 
     resolution = mark(
         "build_resolution_table (plan)",
-        lambda: build_resolution_table(spark, mentions, triples, gaz_df, gaz_bc),
+        lambda: build_resolution_table(spark, mentions, triples, gaz_bc).table,
     ).persist()
     mark("resolution materialize", lambda: resolution.count())
 

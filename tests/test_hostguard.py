@@ -47,6 +47,13 @@ def test_decay_tail_bounded_by_absolute_ceiling(monkeypatch) -> None:
     )
 
 
+def test_zero_threshold_gives_zero_decay_ceiling() -> None:
+    # a falsy threshold must not switch the absolute bound off
+    assert hostguard.decay_ceiling(0.0) == 0.0
+    assert hostguard.decay_ceiling(4.0) == 12.0
+    assert hostguard.decay_ceiling(None) is None
+
+
 def test_decay_tail_requires_opt_in(monkeypatch) -> None:
     _patch(monkeypatch, l1=12.0, l5=16.0, rate=0.1)
     assert not hostguard.wait_for_admission(4.0, max_wait_s=0, poll_s=0.01)

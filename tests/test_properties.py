@@ -10,7 +10,9 @@ Python: no Spark session needed.
 
 from __future__ import annotations
 
-from hypothesis import given, settings
+from difflib import SequenceMatcher
+
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from islamic_ner_spark.functions.annotate import (
@@ -20,6 +22,13 @@ from islamic_ner_spark.functions.annotate import (
     repair_bio,
 )
 from islamic_ner_spark.functions.normalize import normalize
+from islamic_ner_spark.functions.resolve import (
+    FUZZY_THRESHOLD,
+    best_fuzzy_candidate,
+    is_similar_pair,
+    ratio_at_least,
+)
+from islamic_ner_spark.sources.gazetteer import Gazetteer
 
 _TYPES = sorted(ENTITY_TYPES)
 _label = st.one_of(
@@ -95,3 +104,65 @@ def test_merge_allowed_labels_preserves_base_entities(candidate) -> None:
     assert len(merged) == len(candidate)
     if candidate:
         assert merged[0] == "B-SCHOLAR"  # occupied slot untouched
+
+
+# -- bound-pruned fuzzy kernels vs unpruned references ----------------------
+
+# a three-letter alphabet makes ratios near the 0.8 threshold, ties, and
+# asymmetric pairs common
+_name = st.text(alphabet="بتن ", min_size=1, max_size=10)
+# ratio(a, b) = 0.4 but ratio(b, a) = 0.8: the argument order matters
+_ASYMMETRIC = ("تبتتب", "تنبتب")
+
+
+def _ratio(a: str, b: str) -> float:
+    return SequenceMatcher(None, a, b).ratio()
+
+
+def _unpruned_best(norm_text, entity_type, gazetteer):
+    """best_fuzzy_candidate before pruning: score every candidate."""
+    if not norm_text:
+        return None
+    best = None
+    for canonical, meta in gazetteer.entity_metadata.items():
+        if meta["type"] != entity_type:
+            continue
+        score = max(_ratio(norm_text, c) for c in (canonical, *meta["variants"]))
+        if best is None or score > best[1]:
+            best = (canonical, score)
+    return best if best is not None and best[1] >= FUZZY_THRESHOLD else None
+
+
+def test_asymmetric_pair_is_asymmetric() -> None:
+    a, b = _ASYMMETRIC
+    assert _ratio(a, b) < FUZZY_THRESHOLD <= _ratio(b, a)
+
+
+@settings(max_examples=300)
+@given(_name, _name, st.floats(min_value=0.0, max_value=1.0))
+@example(*_ASYMMETRIC, FUZZY_THRESHOLD)
+@example(*reversed(_ASYMMETRIC), FUZZY_THRESHOLD)
+def test_pruned_pair_kernels_match_unpruned(a, b, floor) -> None:
+    exact = _ratio(a, b)
+    assert ratio_at_least(a, b, floor) == (exact if exact >= floor else None)
+    assert is_similar_pair(a, b) == (exact >= FUZZY_THRESHOLD)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(
+        st.tuples(st.sampled_from(["SCHOLAR", "BOOK"]), st.lists(_name, min_size=1, max_size=3)),
+        min_size=1,
+        max_size=8,
+    ),
+    _name,
+    st.sampled_from(["SCHOLAR", "BOOK"]),
+)
+@example([("SCHOLAR", ["تبتتب"]), ("SCHOLAR", ["تنبتب"])], "تنبتب", "SCHOLAR")
+@example([("SCHOLAR", ["بتنب"]), ("SCHOLAR", ["بتنت"])], "بتن", "SCHOLAR")  # tie
+def test_pruned_best_fuzzy_candidate_matches_unpruned(entries, text, etype) -> None:
+    gazetteer = Gazetteer(entries)
+    norm = normalize(text)
+    assert best_fuzzy_candidate(norm, etype, gazetteer) == _unpruned_best(
+        norm, etype, gazetteer
+    )

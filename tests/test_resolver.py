@@ -82,3 +82,113 @@ def test_new_entity_blocking_cap_preserves_small_block_semantics(spark) -> None:
     uncapped = sorted(map(tuple, new_pair_edges(nodes, max_block_size=10**9,
                                                 log_dropped=False).collect()))
     assert capped == uncapped and len(capped) >= 2
+
+
+# -- local vs distributed resolution ------------------------------------------
+
+# canonicals for the exact / variant / fuzzy rungs, and two canonicals that
+# tie for "سفيان بن عيينة الكوفو" (one substituted letter each, ratio 20/21):
+# the earlier one must win on both paths
+_AGREEMENT_GAZETTEER = [
+    ("SCHOLAR", ["محمد بن إسماعيل البخاري", "البخاري"]),
+    ("SCHOLAR", ["مالك بن أنس", "مالك"]),
+    ("SCHOLAR", ["سفيان بن عيينة الكوفي"]),
+    ("SCHOLAR", ["سفيان بن عيينة الكوفا"]),
+    ("BOOK", ["صحيح البخاري"]),
+]
+_AGREEMENT_TEXTS = [
+    "حدثنا البخاري عن مالك بن أنس",
+    "حدثنا محمد بن إسماعيل البخاريي عن سفيان بن عيينة الكوفو",
+    "حدثنا زياد بن عكرمة الكوفي عن زياد بن عكرمه الكوفي",
+    "حدثنا محمد بن محمد عن محمد بن محمدي",
+    "اخبرنا قتادة بن عطاء البصري عن قتادة بن عطا البصري",
+    "حدثنا شعبة عن مالك في صحيح البخاري",
+]
+
+
+def _rows(df) -> list:
+    return sorted(map(repr, df.collect()))
+
+
+def _build_both_ways(spark, monkeypatch, texts, gazetteer):
+    """build_graph at the default LOCAL_VOCAB_LIMIT and with the limit at
+    0, which sends every vocabulary down the distributed ladder."""
+    from islamic_ner_spark.operators import linking
+    from islamic_ner_spark.plans.pipeline import build_graph
+
+    transcripts = spark.createDataFrame(
+        [(f"c{i}", 0, "assistant", t, None, None) for i, t in enumerate(texts)],
+        "conv_id string, turn_idx int, role string, text string, tool string, "
+        "ts timestamp",
+    )
+    out = []
+    for limit in (linking.LOCAL_VOCAB_LIMIT, 0):
+        monkeypatch.setattr(linking, "LOCAL_VOCAB_LIMIT", limit)
+        result = build_graph(spark, transcripts, gazetteer=gazetteer)
+        out.append(
+            (_rows(result.resolution), _rows(result.nodes), _rows(result.edges),
+             result.resolution.collect())
+        )
+        result.unpersist()
+    return out
+
+
+def test_local_and_distributed_resolution_agree(spark, monkeypatch) -> None:
+    """The driver-side pass and the distributed ladder give the same
+    resolution rows and the same graph, over exact, fuzzy (including a
+    tie), new-clustered and repeated-token strings."""
+    from islamic_ner_spark.sources.gazetteer import Gazetteer
+
+    local, distributed = _build_both_ways(
+        spark, monkeypatch, _AGREEMENT_TEXTS, Gazetteer(_AGREEMENT_GAZETTEER)
+    )
+    assert local[:3] == distributed[:3]
+
+    by_norm = {r["norm_text"]: r for r in local[3]}
+    assert {r["match_type"] for r in local[3]} == {"exact", "fuzzy", "new"}
+    assert by_norm[normalize("سفيان بن عيينة الكوفو")]["canonical_name"] == normalize(
+        "سفيان بن عيينة الكوفي"
+    )
+    # two new spellings cluster under the lexicographic-min one
+    zyad = [normalize("زياد بن عكرمة الكوفي"), normalize("زياد بن عكرمه الكوفي")]
+    assert {by_norm[z]["canonical_name"] for z in zyad} == {min(zyad)}
+    assert normalize("محمد بن محمد") in by_norm
+
+
+def test_local_and_distributed_block_cap_agree(spark, monkeypatch, caplog) -> None:
+    """Under a lowered MAX_BLOCK_SIZE both paths drop the same blocks,
+    counting a repeated token once per occurrence as the exploded token
+    rows do, and both log the dropped-block WARNING."""
+    import logging
+
+    from islamic_ner_spark.operators import linking
+    from islamic_ner_spark.sources.gazetteer import Gazetteer
+
+    bc = spark.sparkContext.broadcast(Gazetteer(_AGREEMENT_GAZETTEER))
+    # محمد: 2 rows from the first name + 1 from the second = 3 > 2, so the
+    # block is dropped even though only two names share it; their ratio
+    # (9/11) would otherwise merge them.  قتادة: 3 names > 2.
+    names = ["محمد بن محمد", "محمد محمدي", "قتادة الكوفي", "قتادة البصري", "قتادة المدني"]
+    mentions = spark.createDataFrame(
+        [(n, "SCHOLAR") for n in names], "text string, entity_type string"
+    )
+    triples = spark.createDataFrame(
+        [], "subj_text string, subj_type string, obj_text string, obj_type string"
+    )
+    monkeypatch.setattr(linking, "MAX_BLOCK_SIZE", 2)
+    out = []
+    for limit in (linking.LOCAL_VOCAB_LIMIT, 0):
+        monkeypatch.setattr(linking, "LOCAL_VOCAB_LIMIT", limit)
+        caplog.clear()
+        with caplog.at_level(logging.WARNING, logger="islamic_ner_spark.capping"):
+            table = linking.build_resolution_table(spark, mentions, triples, bc).table
+            rows = sorted(map(tuple, table.collect()))
+        dropped = [r.getMessage() for r in caplog.records
+                   if "new-entity-blocking: dropped" in r.getMessage()]
+        assert len(dropped) == 1
+        assert "'محمد', 3)" in dropped[0]
+        assert f"'{normalize('قتادة')}', 3)" in dropped[0]
+        out.append(rows)
+    assert out[0] == out[1]
+    canon = {r[0]: r[3] for r in out[0]}
+    assert canon["محمد بن محمد"] != canon["محمد محمدي"]

@@ -101,9 +101,7 @@ def test_resolve_triples_salted_matches_broadcast(spark, resolver_gazetteer) -> 
         "conv_id", "turn_idx", "doc_id", "mentions", "triples"
     )
     mentions, triples = extract_mentions(extracted), extract_triples(extracted)
-    resolution = build_resolution_table(
-        spark, mentions, triples, resolver_gazetteer.to_dataframe(spark), bc
-    )
+    resolution = build_resolution_table(spark, mentions, triples, bc).table
     cols = ["doc_id", "rel_idx", "pred", "subj_canonical", "obj_canonical", "confidence"]
     broadcasted = sorted(
         map(tuple, resolve_triples(triples, resolution).select(cols).collect())
